@@ -37,6 +37,20 @@ from pyspark.sql import DataFrame
 SPREAD_MAX_BYTES_PER_CORE = 16 * 1024 * 1024  # 16 MiB
 
 
+def _max_bytes_per_core(spark) -> int:
+    """``spark.chearch.spread.maxBytesPerCore`` (default 16 MiB; the
+    default too when unreadable; 0 or less disables spreading)."""
+    try:
+        return int(
+            spark.conf.get(
+                "spark.chearch.spread.maxBytesPerCore",
+                str(SPREAD_MAX_BYTES_PER_CORE),
+            )
+        )
+    except Exception:
+        return SPREAD_MAX_BYTES_PER_CORE
+
+
 def _size_estimate(df: DataFrame) -> int:
     """Catalyst's size-in-bytes estimate for the optimized plan (file
     size for parquet scans).  -1 when unavailable."""
@@ -60,15 +74,7 @@ def spread_small_scan(df: DataFrame, cores: int | None = None) -> DataFrame:
         cores = spark.sparkContext.defaultParallelism
     if cores <= 1:
         return df
-    try:
-        per_core = int(
-            spark.conf.get(
-                "spark.chearch.spread.maxBytesPerCore",
-                str(SPREAD_MAX_BYTES_PER_CORE),
-            )
-        )
-    except Exception:
-        per_core = SPREAD_MAX_BYTES_PER_CORE
+    per_core = _max_bytes_per_core(spark)
     if per_core <= 0:
         return df
     est = _size_estimate(df)
@@ -89,15 +95,7 @@ def is_small_input(df: DataFrame) -> bool:
     the planner keeps the scale-safe choice."""
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
-    try:
-        per_core = int(
-            spark.conf.get(
-                "spark.chearch.spread.maxBytesPerCore",
-                str(SPREAD_MAX_BYTES_PER_CORE),
-            )
-        )
-    except Exception:
-        per_core = SPREAD_MAX_BYTES_PER_CORE
+    per_core = _max_bytes_per_core(spark)
     if per_core <= 0:
         return False
     est = _size_estimate(df)

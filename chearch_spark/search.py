@@ -28,6 +28,8 @@ from __future__ import annotations
 
 import json
 import os
+import stat
+from functools import cached_property
 
 import numpy as np
 import pandas as pd
@@ -607,6 +609,175 @@ def _fold_or(terms: list[str]) -> Node:
     return node
 
 
+class _Layout:
+    """Every view an :class:`Index` derives from the on-disk layout:
+    the ``segments/`` and ``docmap/`` listings, the replaced set, the
+    dictionary sidecars, Blooms and probes, the split flag, the segment
+    DataFrame and the decoded-posting LRU.  Each is read lazily on
+    first use, so opening an Index pays for none of them.
+    ``Index.refresh()`` swaps in a new object, so no view can outlive
+    the layout it was read from."""
+
+    def __init__(self, ix: "Index") -> None:
+        self.spark = ix.spark
+        self.path = ix.path
+        self.seg_dir, self.dict_dir, self.map_dir = (
+            ix.seg_dir, ix.dict_dir, ix.map_dir
+        )
+        # driver-local DECODED cache — the RAM analogue of the
+        # reference's MemorySegment residency (`memorysegment.
+        # chpl:76-118`): the local paths fill it lazily, so repeated
+        # terms/segments never touch parquet (or the varint decoder)
+        # again.  LRU with a BYTE budget (``local_cache_bytes``) — a
+        # long-lived serving process over a rotating hot-term workload
+        # must hold steady RSS, not grow per distinct term touched.
+        # Keys: ("p", term) -> {seg_id: (docs, tfs, blocks|None)};
+        #       ("o", term) -> {seg_id: occurrence keys};
+        #       ("r", term) -> {seg_id: raw parity columns};
+        #       ("m", seg_id) -> (ext_ids, doc_lens)
+        self.local_cache = _ByteLRU(ix.local_cache_bytes)
+        self.stats_cache: dict[str, tuple[int, int] | None] = {}
+        self.segs_cache: dict[str, list[int] | None] = {}  # term -> segs
+        # filled by Index._load_blooms / _bloom_candidates: whether the
+        # full filter map is resident decides the probe strategy
+        self.blooms: dict[int, tuple[int, bytes]] | None = None
+        self.bloom_probe = None  # vectorized probe over `blooms`
+        self.partial_probe = None  # (seg-set sig, probe) for the
+        # dictionary-uncovered tail — see Index._bloom_candidates
+
+    @cached_property
+    def seg_files(self) -> dict:
+        """seg_id -> ``os.DirEntry`` of EVERY ``segment-*.parquet`` file
+        (replaced ghosts included) — the one listing of ``segments/``."""
+        with os.scandir(self.seg_dir) as it:
+            return {
+                int(e.name[len("segment-"):-len(".parquet")]): e
+                for e in it
+                if e.name.startswith("segment-")
+                and e.name.endswith(".parquet")
+            }
+
+    @cached_property
+    def replaced(self) -> set[int]:
+        """Segment ids queries must treat as dead even if files linger:
+        compaction-replaced inputs (crash between manifest publish and
+        deletion) AND orphan compaction outputs (crash before the
+        manifest) — scanning either would double-count docs."""
+        from chearch_spark.streaming.compact import replaced_seg_ids
+
+        return replaced_seg_ids(self.path)
+
+    @cached_property
+    def all_segs(self) -> list[int]:
+        """Every LIVE segment id present on disk (filename-encoded).
+        The authoritative fan-out set — bloom coverage is checked
+        against it, never assumed; compaction-replaced ghosts are
+        excluded even if their files linger."""
+        dead = self.replaced
+        return sorted(s for s in self.seg_files if s not in dead)
+
+    @cached_property
+    def segs_unsplit(self) -> bool:
+        """True when Spark's file-split planning can NEVER break a
+        segment file across scan partitions, i.e. every segment file
+        is no larger than ``min(spark.sql.files.openCostInBytes,
+        spark.sql.files.maxPartitionBytes)`` (``maxSplitBytes`` is
+        ``min(maxPartitionBytes, max(openCostInBytes, bytesPerCore))``,
+        so that bound is sufficient for any core count).  Gates the
+        shuffle-free kernel dispatch in :meth:`Index._per_segment`
+        (guide §2.4): when True, every scan partition holds only WHOLE
+        segments and the per-query groupBy(seg_id) exchange is
+        unnecessary."""
+
+        def _conf_bytes(key: str, default: int) -> int:
+            try:
+                v = str(self.spark.conf.get(key, str(default)))
+            except Exception:
+                return default
+            v = v.strip().lower()
+            for suf, mul in (
+                ("k", 1024), ("m", 1024**2), ("g", 1024**3),
+                ("kb", 1024), ("mb", 1024**2), ("gb", 1024**3),
+                ("b", 1),
+            ):
+                if v.endswith(suf) and v[: -len(suf)].isdigit():
+                    return int(v[: -len(suf)]) * mul
+            return int(v) if v.isdigit() else default
+
+        cap = min(
+            _conf_bytes("spark.sql.files.openCostInBytes", 4 * 1024**2),
+            _conf_bytes("spark.sql.files.maxPartitionBytes", 128 * 1024**2),
+        )
+        try:
+            return all(
+                e.stat().st_size <= cap for e in self.seg_files.values()
+            )
+        except OSError:
+            return False
+
+    @cached_property
+    def docmap_files(self) -> dict[int, str]:
+        """seg_id -> docmap file path (filename-encoded id)."""
+        return {
+            int(fn[len("docmap-"):-len(".parquet")]): os.path.join(
+                self.map_dir, fn
+            )
+            for fn in os.listdir(self.map_dir)
+            if fn.startswith("docmap-") and fn.endswith(".parquet")
+        }
+
+    @cached_property
+    def dict_bounds(self) -> dict[str, tuple[str, str]]:
+        """{part_file: (min_term, max_term)} — from the build-time
+        ``dict_bounds.json`` sidecar, VALIDATED against the directory
+        listing: a sidecar naming files that no longer exist (crash
+        between the dictionary overwrite and the sidecar rewrite, or a
+        concurrent finalize) is discarded and the bounds are recomputed
+        from the real files — a stale sidecar would silently resolve
+        present terms as absent.  A legacy index without a sidecar is
+        scanned ONCE per layout."""
+        from chearch_spark.build import compute_dict_bounds
+
+        p = os.path.join(self.path, "dict_bounds.json")
+        if os.path.exists(p):
+            with open(p) as f:
+                raw = json.load(f)["files"]
+            if set(raw) <= set(os.listdir(self.dict_dir)):
+                return {fn: (b[0], b[1]) for fn, b in raw.items()}
+        return {
+            fn: (b[0], b[1])
+            for fn, b in compute_dict_bounds(self.dict_dir).items()
+        }
+
+    @cached_property
+    def dict_has_segs(self) -> bool:
+        """Does the dictionary carry the term → segments directory?"""
+        import pyarrow.dataset as ds
+
+        try:
+            names = ds.dataset(self.dict_dir, format="parquet").schema.names
+        except Exception:
+            names = []
+        return "segs" in names
+
+    @cached_property
+    def dict_coverage(self) -> set[int] | None:
+        """Segments the directory describes (dict_coverage.json).
+        None = legacy dictionary — the directory cannot be trusted for
+        pruning because newer segments would be invisible to it."""
+        p = os.path.join(self.path, "dict_coverage.json")
+        if not os.path.exists(p):
+            return None
+        with open(p) as f:
+            return {int(s) for s in json.load(f)["seg_ids"]}
+
+    @cached_property
+    def seg_df(self):
+        """The segment DataFrame (file listing + schema inference paid
+        once per layout, not per query)."""
+        return self.spark.read.parquet(self.seg_dir)
+
+
 class Index:
     """Handle to a built index directory (segments/docmap/dictionary/
     stats/manifest)."""
@@ -616,74 +787,20 @@ class Index:
     ) -> None:
         self.spark = spark
         self.path = path
-        with open(os.path.join(path, "stats.json")) as f:
-            self.stats = json.load(f)
-        self.n_docs = int(self.stats["n_docs"])
-        self.avgdl = float(self.stats["avgdl"])
         self.seg_dir = os.path.join(path, "segments")
         self.dict_dir = os.path.join(path, "dictionary")
         self.map_dir = os.path.join(path, "docmap")
-        # driver-local DECODED posting/meta cache — the RAM analogue
-        # of the reference's MemorySegment residency (`memorysegment.
-        # chpl:76-118`): local_search fills it lazily, so repeated
-        # terms/segments never touch parquet (or the varint decoder)
-        # again.  LRU with a BYTE budget (``local_cache_bytes``) — a
-        # long-lived serving process over a rotating hot-term workload
-        # must hold steady RSS, not grow per distinct term touched.
-        # Keys: ("p", term) -> {seg_id: (docs, tfs, blocks|None)};
-        #       ("m", seg_id) -> (ext_ids, doc_lens)
+        # byte budget of the layout's decoded posting/meta LRU
         self.local_cache_bytes = int(local_cache_bytes)
-        self._local_cache = _ByteLRU(self.local_cache_bytes)
-        self._stats_cache: dict[str, tuple[int, int] | None] = {}
-        self._blooms: dict[int, tuple[int, bytes]] | None = None
-        self._bloom_probe = None  # vectorized probe, built once
-        self._partial_probe = None  # (seg-set sig, probe) for the
-        # dictionary-uncovered tail — see _bloom_candidates
-        self._all_segs: list[int] | None = None
-        self._replaced: set[int] | None = None
-        self._dict_bounds: dict[str, tuple[str, str]] | None = None
-        self._dict_segs_flag: bool | None = None
-        self._dict_coverage: set[int] | None | bool = False  # False=unloaded
-        self._segs_cache: dict[str, list[int] | None] = {}
-        self._tomb: np.ndarray | None = None  # sorted deleted ext ids
         self._tomb_bc = None  # Spark broadcast of a LARGE tomb set
-        self._seg_df = None  # lazily cached segment DataFrame (file
-        # listing + schema inference paid once per Index, not per query)
+        self.refresh()
 
     # -- dictionary -----------------------------------------------------
-    def _load_dict_bounds(self) -> dict[str, tuple[str, str]]:
-        """{part_file: (min_term, max_term)} — from the build-time
-        ``dict_bounds.json`` sidecar, VALIDATED against the directory
-        listing: a sidecar naming files that no longer exist (crash
-        between the dictionary overwrite and the sidecar rewrite, or a
-        concurrent finalize) is discarded and the bounds are recomputed
-        from the real files — a stale sidecar would silently resolve
-        present terms as absent.  A legacy index without a sidecar is
-        scanned ONCE and cached for the Index lifetime."""
-        if self._dict_bounds is None:
-            from chearch_spark.build import compute_dict_bounds
-
-            bounds = None
-            p = os.path.join(self.path, "dict_bounds.json")
-            if os.path.exists(p):
-                with open(p) as f:
-                    raw = json.load(f)["files"]
-                on_disk = set(os.listdir(self.dict_dir))
-                if set(raw) <= on_disk:
-                    bounds = {fn: (b[0], b[1]) for fn, b in raw.items()}
-            if bounds is None:
-                bounds = {
-                    fn: (b[0], b[1])
-                    for fn, b in compute_dict_bounds(self.dict_dir).items()
-                }
-            self._dict_bounds = bounds
-        return self._dict_bounds
-
     def _dict_files_for(self, terms: list[str]) -> list[str]:
         """Part files whose term range may contain any of `terms`
         (point probes) — the sidecar makes this an O(files) in-memory
         scan with O(matching files) opens."""
-        bounds = self._load_dict_bounds()
+        bounds = self._layout.dict_bounds
         out = []
         for fn, (lo, hi) in bounds.items():
             if any(lo <= t <= hi for t in terms):
@@ -692,45 +809,16 @@ class Index:
 
     def _dict_files_for_range(self, lo: str, hi: str) -> list[str]:
         """Part files intersecting the half-open term range [lo, hi)."""
-        bounds = self._load_dict_bounds()
+        bounds = self._layout.dict_bounds
         return [
             os.path.join(self.dict_dir, fn)
             for fn, (fmin, fmax) in bounds.items()
             if fmin < hi and fmax >= lo
         ]
 
-    def _dict_has_segs(self) -> bool:
-        """Does the dictionary carry the term → segments directory?"""
-        if self._dict_segs_flag is None:
-            import pyarrow.dataset as ds
-
-            try:
-                names = ds.dataset(
-                    self.dict_dir, format="parquet"
-                ).schema.names
-            except Exception:
-                names = []
-            self._dict_segs_flag = "segs" in names
-        return self._dict_segs_flag
-
-    def _load_dict_coverage(self) -> set[int] | None:
-        """Segments the directory describes (dict_coverage.json).
-        None = legacy dictionary — the directory cannot be trusted for
-        pruning because newer segments would be invisible to it."""
-        if self._dict_coverage is False:
-            p = os.path.join(self.path, "dict_coverage.json")
-            if os.path.exists(p):
-                with open(p) as f:
-                    self._dict_coverage = {
-                        int(s) for s in json.load(f)["seg_ids"]
-                    }
-            else:
-                self._dict_coverage = None
-        return self._dict_coverage
-
     def _dict_files_all(self) -> list[str]:
         """Every dictionary part file (bounds-sidecar order)."""
-        bounds = self._load_dict_bounds()
+        bounds = self._layout.dict_bounds
         return [os.path.join(self.dict_dir, fn) for fn in sorted(bounds)]
 
     def term_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
@@ -752,7 +840,7 @@ class Index:
         files = self._dict_files_for(list(terms))
         if not files:
             return {}
-        has_segs = self._dict_has_segs()
+        has_segs = self._layout.dict_has_segs
         cols = ["term", "df", "cf"] + (["segs"] if has_segs else [])
         table = ds.dataset(files, format="parquet").to_table(
             filter=ds.field("term").isin(list(terms)), columns=cols
@@ -766,7 +854,7 @@ class Index:
             out[t] = (int(df), int(cf))
             if segs_col is not None:
                 sl = segs_col[i]
-                self._segs_cache[t] = (
+                self._layout.segs_cache[t] = (
                     None if sl is None else [int(s) for s in sl]
                 )
         return out
@@ -1206,7 +1294,7 @@ class Index:
         """(doc_id, seg_id, doc_index, doc_len, sha256) — live segments
         only (compaction ghosts excluded during a crash window)."""
         dm = self.spark.read.parquet(self.map_dir)
-        dead = self._replaced_seg_ids()
+        dead = self._layout.replaced
         if dead:
             from pyspark.sql import functions as F
 
@@ -1215,43 +1303,30 @@ class Index:
 
     # -- segment pruning (per-segment term Blooms) ------------------------
     def _load_blooms(self) -> dict[int, tuple[int, bytes]]:
-        if self._blooms is None:
+        lay = self._layout
+        if lay.blooms is None:
             from chearch_spark.operators.bloom import read_bloom_map
 
-            self._blooms = read_bloom_map(
-                os.path.join(self.path, "blooms")
-            )
-        return self._blooms
+            lay.blooms = read_bloom_map(os.path.join(self.path, "blooms"))
+        return lay.blooms
 
     def refresh(self) -> None:
-        """Invalidate every cached view of the on-disk layout AND
-        reload the global stats.  Call after a compaction/finalize (or
+        """Reload the global stats and drop every cached view of the
+        on-disk layout (file listings, dictionary sidecars, Blooms,
+        probe results, the split flag and the decoded-posting LRU — all
+        of it lives on one :class:`_Layout`, replaced here as a whole)
+        and the tombstone set.  Call after a compaction/finalize (or
         any maintenance that adds/removes segment files) on a
-        long-lived Index — the caches hold file listings whose members
-        maintenance deletes, and scoring with a stale n_docs/avgdl
-        would break rank-identity with a freshly opened Index."""
+        long-lived Index — the old layout holds file listings whose
+        members maintenance deletes, and scoring with a stale
+        n_docs/avgdl would break rank-identity with a freshly opened
+        Index.  Nothing is read until the next query needs it."""
         with open(os.path.join(self.path, "stats.json")) as f:
             self.stats = json.load(f)
         self.n_docs = int(self.stats["n_docs"])
         self.avgdl = float(self.stats["avgdl"])
-        self._seg_df = None
-        self._all_segs = None
-        self._replaced = None
-        self._blooms = None
-        self._bloom_probe = None
-        self._partial_probe = None
-        self._dict_bounds = None
-        self._local_cache = _ByteLRU(self.local_cache_bytes)
-        self._stats_cache = {}
-        self._segs_cache = {}
-        self._dict_segs_flag = None
-        self._dict_coverage = False
-        self._tomb = None
-        self._drop_tomb_broadcast()
-        if hasattr(self, "_parity_cache"):
-            del self._parity_cache
-        if hasattr(self, "_docmap_files"):
-            del self._docmap_files
+        self._layout = _Layout(self)
+        self._forget_tombstones()
 
     def delete(self, doc_ids) -> int:
         """Tombstone external doc ids on THIS index and make the
@@ -1264,28 +1339,30 @@ class Index:
 
         n = delete_docs(self.path, doc_ids)
         if n:
-            self._tomb = None
-            self._drop_tomb_broadcast()
+            self._forget_tombstones()
         return n
 
-    def _tombstones(self) -> np.ndarray:
-        """Sorted external doc ids deleted via
-        :func:`chearch_spark.tombstones.delete_docs` — excluded from
-        every query result until a compaction purges them physically.
-        Cached per Index; ``refresh()`` reloads."""
-        if self._tomb is None:
-            from chearch_spark.tombstones import load_tombstones
-
-            self._tomb = load_tombstones(self.path)
-        return self._tomb
-
-    def _drop_tomb_broadcast(self) -> None:
+    def _forget_tombstones(self) -> None:
+        """Drop the cached tombstone set and its broadcast (if any);
+        the next query reloads them."""
+        self._tomb: np.ndarray | None = None  # sorted deleted ext ids
         if self._tomb_bc is not None:
             try:
                 self._tomb_bc.unpersist()
             except Exception:
                 pass  # session already stopped
             self._tomb_bc = None
+
+    def _tombstones(self) -> np.ndarray:
+        """Sorted external doc ids deleted via
+        :func:`chearch_spark.tombstones.delete_docs` — excluded from
+        every query result until a compaction purges them physically.
+        Cached per Index; ``delete()`` and ``refresh()`` reload."""
+        if self._tomb is None:
+            from chearch_spark.tombstones import load_tombstones
+
+            self._tomb = load_tombstones(self.path)
+        return self._tomb
 
     def _tomb_handle(self):
         """Tombstone set in the form query kernels should capture:
@@ -1301,77 +1378,15 @@ class Index:
             self._tomb_bc = self.spark.sparkContext.broadcast(t)
         return self._tomb_bc
 
-    def _replaced_seg_ids(self) -> set[int]:
-        """Segment ids queries must treat as dead even if files linger:
-        compaction-replaced inputs (crash between manifest publish and
-        deletion) AND orphan compaction outputs (crash before the
-        manifest) — scanning either would double-count docs."""
-        if self._replaced is None:
-            from chearch_spark.streaming.compact import replaced_seg_ids
-
-            self._replaced = replaced_seg_ids(self.path)
-        return self._replaced
-
     def _all_seg_ids(self) -> list[int]:
-        """Every LIVE segment id present on disk (filename-encoded),
-        cached.  The authoritative fan-out set — bloom coverage is
-        checked against it, never assumed; compaction-replaced ghosts
-        are excluded even if their files linger."""
-        if self._all_segs is None:
-            dead = self._replaced_seg_ids()
-            segs = []
-            for fn in os.listdir(self.seg_dir):
-                if fn.startswith("segment-") and fn.endswith(".parquet"):
-                    sid = int(fn[len("segment-"):-len(".parquet")])
-                    if sid not in dead:
-                        segs.append(sid)
-            self._all_segs = sorted(segs)
-        return self._all_segs
+        """Every LIVE segment id present on disk (see
+        :attr:`_Layout.all_segs`)."""
+        return self._layout.all_segs
 
     def _segments_unsplittable(self) -> bool:
-        """True when Spark's file-split planning can NEVER break a
-        segment file across scan partitions, i.e. every segment file
-        is no larger than ``min(spark.sql.files.openCostInBytes,
-        spark.sql.files.maxPartitionBytes)`` (``maxSplitBytes`` is
-        ``min(maxPartitionBytes, max(openCostInBytes, bytesPerCore))``,
-        so that bound is sufficient for any core count).  Cached per
-        Index; one directory scan.  Gates the shuffle-free kernel
-        dispatch in :meth:`_scored_local` (guide §2.4): when True,
-        every scan partition holds only WHOLE segments and the
-        per-query groupBy(seg_id) exchange is unnecessary."""
-        if getattr(self, "_segs_unsplit", None) is None:
-
-            def _conf_bytes(key: str, default: int) -> int:
-                try:
-                    v = str(self.spark.conf.get(key, str(default)))
-                except Exception:
-                    return default
-                v = v.strip().lower()
-                for suf, mul in (
-                    ("k", 1024), ("m", 1024**2), ("g", 1024**3),
-                    ("kb", 1024), ("mb", 1024**2), ("gb", 1024**3),
-                    ("b", 1),
-                ):
-                    if v.endswith(suf) and v[: -len(suf)].isdigit():
-                        return int(v[: -len(suf)]) * mul
-                return int(v) if v.isdigit() else default
-
-            cap = min(
-                _conf_bytes("spark.sql.files.openCostInBytes", 4 * 1024**2),
-                _conf_bytes(
-                    "spark.sql.files.maxPartitionBytes", 128 * 1024**2
-                ),
-            )
-            try:
-                self._segs_unsplit = all(
-                    e.stat().st_size <= cap
-                    for e in os.scandir(self.seg_dir)
-                    if e.name.startswith("segment-")
-                    and e.name.endswith(".parquet")
-                )
-            except OSError:
-                self._segs_unsplit = False
-        return self._segs_unsplit
+        """Can Spark never split a segment file across scan partitions
+        (see :attr:`_Layout.segs_unsplit`)?"""
+        return self._layout.segs_unsplit
 
     def profile(self, query: Node | str, k: int = spec.DEFAULT_K) -> dict:
         """Query profiling (the Elasticsearch ``_profile`` flavor):
@@ -1445,7 +1460,7 @@ class Index:
 
         if os.path.exists(os.path.join(dest, "stats.json")):
             raise FileExistsError(f"snapshot destination {dest} exists")
-        live = set(self._all_seg_ids())
+        lay = self._layout
         # fresh dot-prefixed stage dir (r7, ADVICE): a fixed
         # {dest}.snap.{pid} name + makedirs(exist_ok=True) could
         # publish a crashed earlier attempt's stale files after PID
@@ -1470,23 +1485,10 @@ class Index:
             n_files += 1
             n_bytes += os.path.getsize(src)
 
-        def seg_of(fn: str, prefix: str) -> int:
-            return int(fn[len(prefix):-len(".parquet")])
-
-        for fn in sorted(os.listdir(self.seg_dir)):
-            if (
-                fn.startswith("segment-")
-                and fn.endswith(".parquet")
-                and seg_of(fn, "segment-") in live
-            ):
-                cp(os.path.join(self.seg_dir, fn), f"segments/{fn}")
-        for fn in sorted(os.listdir(self.map_dir)):
-            if (
-                fn.startswith("docmap-")
-                and fn.endswith(".parquet")
-                and seg_of(fn, "docmap-") in live
-            ):
-                cp(os.path.join(self.map_dir, fn), f"docmap/{fn}")
+        for sid in lay.all_segs:
+            seg_f, dm_f = lay.seg_files[sid], lay.docmap_files[sid]
+            cp(seg_f.path, f"segments/{seg_f.name}")
+            cp(dm_f, f"docmap/{os.path.basename(dm_f)}")
         for sub in ("dictionary", "blooms", "tombstones"):
             p = os.path.join(self.path, sub)
             if os.path.isdir(p):
@@ -1497,6 +1499,9 @@ class Index:
             if fn.endswith(".json") and not fn.startswith((".", "_")):
                 cp(os.path.join(self.path, fn), fn)
         try:
+            # mkdtemp stages with mode 0700; publish with the source
+            # index directory's permissions instead
+            os.chmod(stage, stat.S_IMODE(os.stat(self.path).st_mode))
             os.rename(stage, dest)
         except OSError:
             shutil.rmtree(stage, ignore_errors=True)
@@ -1533,17 +1538,12 @@ class Index:
                 for r in json.load(f).get("segments", []):
                     source[int(r["seg_id"])] = "compacted"
         # filename-encoded ids with kind-specific zero padding (batch
-        # 5 digits, stream/compact 9) — list once, never format
-        seg_files = {
-            int(fn[len("segment-"):-len(".parquet")]): os.path.join(
-                self.seg_dir, fn
-            )
-            for fn in os.listdir(self.seg_dir)
-            if fn.startswith("segment-") and fn.endswith(".parquet")
-        }
+        # 5 digits, stream/compact 9) — the layout's listing, never
+        # a formatted name
+        seg_files = self._layout.seg_files
         rows = []
         for sid in self._all_seg_ids():
-            seg_f = seg_files[sid]
+            seg_f = seg_files[sid].path
             dm_f = self._docmap_file_of(sid)
             rows.append(
                 (
@@ -1592,7 +1592,7 @@ class Index:
             "total_tokens": int(self.stats["total_tokens"]),
             "avgdl": self.avgdl,
             "live_segments": len(self._all_seg_ids()),
-            "replaced_segments": len(self._replaced_seg_ids()),
+            "replaced_segments": len(self._layout.replaced),
             "pending_deletes": int(len(self._tombstones())),
             "dict_terms": int(dict_terms),
             "bytes": {**bytes_by_store, "total": sum(bytes_by_store.values())},
@@ -1623,17 +1623,18 @@ class Index:
         probe runs as a Spark job over the blooms parquet (filter bytes
         never reach the driver); below it, the driver-resident
         vectorized ``BloomProbe`` answers in sub-ms."""
-        dead = self._replaced_seg_ids()
+        lay = self._layout
+        dead = lay.replaced
         terms = node.terms()
-        all_segs = self._all_seg_ids()
+        all_segs = lay.all_segs
         live = sorted(all_segs) if dead else None
         if not terms:
             return live
         require_all = all_terms_required(node)
 
         live_set = set(all_segs)
-        covered = self._load_dict_coverage()
-        if covered is not None and self._dict_has_segs():
+        covered = lay.dict_coverage
+        if covered is not None and lay.dict_has_segs:
             stats = self._cached_stats(terms)
             cov_live = covered & live_set
             sets = []
@@ -1641,7 +1642,7 @@ class Index:
                 if t not in stats:
                     sets.append(set())  # not in the dictionary at all
                 else:
-                    sl = self._segs_cache.get(t)
+                    sl = lay.segs_cache.get(t)
                     # None = hot term over DICT_SEGS_CAP: everywhere
                     sets.append(
                         cov_live if sl is None else set(sl) & live_set
@@ -1710,7 +1711,7 @@ class Index:
         )
         if (
             scope > bloom_mod.DISTRIBUTED_PROBE_THRESHOLD
-            and self._blooms is None  # an already-loaded map stays hot
+            and self._layout.blooms is None  # a loaded map stays hot
         ):
             if not allow_spark:
                 # driver-local caller, over-threshold scope: loading
@@ -1722,7 +1723,7 @@ class Index:
                 seg_ids=sorted(restrict) if restrict is not None else None,
             )
             return set(cand_l), set(bloomed_l)
-        if restrict is not None and self._blooms is None:
+        if restrict is not None and self._layout.blooms is None:
             probe = self._restricted_probe(restrict, bloom_dir)
             if probe is None:
                 return None
@@ -1733,11 +1734,12 @@ class Index:
         blooms = self._load_blooms()
         if not blooms:
             return None
-        if self._bloom_probe is None:
-            self._bloom_probe = bloom_mod.BloomProbe(blooms)
+        lay = self._layout
+        if lay.bloom_probe is None:
+            lay.bloom_probe = bloom_mod.BloomProbe(blooms)
         return (
-            set(self._bloom_probe.candidates(terms, require_all)),
-            self._bloom_probe.seg_set,
+            set(lay.bloom_probe.candidates(terms, require_all)),
+            lay.bloom_probe.seg_set,
         )
 
     def _restricted_probe(self, restrict: set[int], bloom_dir: str):
@@ -1747,15 +1749,13 @@ class Index:
         none of the restricted segments have bloom entries."""
         from chearch_spark.operators import bloom as bloom_mod
 
+        lay = self._layout
         sig = frozenset(restrict)  # exact: stale reuse is impossible
-        if (
-            self._partial_probe is not None
-            and self._partial_probe[0] == sig
-        ):
-            return self._partial_probe[1]
+        if lay.partial_probe is not None and lay.partial_probe[0] == sig:
+            return lay.partial_probe[1]
         blooms = bloom_mod.read_bloom_map(bloom_dir, seg_ids=restrict)
         probe = bloom_mod.BloomProbe(blooms) if blooms else None
-        self._partial_probe = (sig, probe)
+        lay.partial_probe = (sig, probe)
         return probe
 
     # -- scan -----------------------------------------------------------
@@ -1764,9 +1764,7 @@ class Index:
     ):
         from pyspark.sql import functions as F
 
-        if self._seg_df is None:
-            self._seg_df = self.spark.read.parquet(self.seg_dir)
-        scan = self._seg_df.filter(
+        scan = self._layout.seg_df.filter(
             F.col("term").isin(list(terms) + [META_TERM])
         )
         if segs is not None:
@@ -2420,16 +2418,8 @@ class Index:
     # -- top-k with document metadata (E5 projection) ----------------------
     def _docmap_file_of(self, seg_id: int) -> str:
         """Docmap file path for a segment (filename-encoded id; the
-        listing is parsed once per Index)."""
-        if not hasattr(self, "_docmap_files"):
-            files: dict[int, str] = {}
-            for fn in os.listdir(self.map_dir):
-                if fn.startswith("docmap-") and fn.endswith(".parquet"):
-                    files[int(fn[len("docmap-"):-len(".parquet")])] = (
-                        os.path.join(self.map_dir, fn)
-                    )
-            self._docmap_files = files
-        return self._docmap_files[int(seg_id)]
+        listing is parsed once per layout)."""
+        return self._layout.docmap_files[int(seg_id)]
 
     def search_with_meta(
         self,
@@ -2694,14 +2684,13 @@ class Index:
 
     # -- driver-local low-latency path ------------------------------------
     def _cached_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
-        miss = [t for t in terms if t not in self._stats_cache]
+        cache = self._layout.stats_cache
+        miss = [t for t in terms if t not in cache]
         if miss:
             got = self.term_stats(miss)
             for t in miss:
-                self._stats_cache[t] = got.get(t)
-        return {
-            t: self._stats_cache[t] for t in terms if self._stats_cache[t]
-        }
+                cache[t] = got.get(t)
+        return {t: cache[t] for t in terms if cache[t]}
 
     def _match_upper_bound(self, node: Node) -> int:
         """TRUE upper bound on ``match_docs(node)``'s row count, from
@@ -2761,7 +2750,7 @@ class Index:
         out: dict[int, tuple] = {}
         missing = []
         for sid in wanted:
-            hit = self._local_cache.get(("m", int(sid)))
+            hit = self._layout.local_cache.get(("m", int(sid)))
             if hit is not None:
                 out[int(sid)] = hit
             else:
@@ -2774,7 +2763,7 @@ class Index:
                 & ds.field("seg_id").isin(missing),
                 columns=["seg_id", "doc_ids", "tfs"],
             )
-            dead = self._replaced_seg_ids()
+            dead = self._layout.replaced
             for seg_id, doc_ids, tfs in zip(
                 table.column("seg_id").to_pylist(),
                 table.column("doc_ids").to_pylist(),
@@ -2787,20 +2776,22 @@ class Index:
                     codec.decode_varints(tfs).astype(np.int64),
                 )
                 nb = entry[0].nbytes + entry[1].nbytes
-                self._local_cache.put(("m", int(seg_id)), entry, nb)
+                self._layout.local_cache.put(("m", int(seg_id)), entry, nb)
                 out[int(seg_id)] = entry
         return out
 
-    def _load_postings(self, terms: list[str]) -> dict[str, dict]:
-        """{term: {seg_id: (docs, tfs, blocks|None)}} from the
-        byte-bounded LRU, reading misses in one pruned parquet read
-        (absent terms cache as empty dicts).  Callers hold the
-        returned snapshot — a later eviction never invalidates a
-        running query."""
+    def _cached_terms(self, kind: str, terms, columns: list[str], decode):
+        """{term: {seg_id: decode(*row)}} from the layout's byte-bounded
+        LRU (key ``(kind, term)``), reading every miss in ONE pruned
+        parquet read of ``columns`` (absent terms cache as empty dicts).
+        ``decode`` maps a row's column values to (entry, nbytes).
+        Callers hold the returned snapshot — a later eviction never
+        invalidates a running query."""
+        cache = self._layout.local_cache
         out: dict[str, dict] = {}
         missing = []
         for t in set(terms):
-            hit = self._local_cache.get(("p", t))
+            hit = cache.get((kind, t))
             if hit is not None:
                 out[t] = hit
             else:
@@ -2811,79 +2802,59 @@ class Index:
 
         table = ds.dataset(self.seg_dir, format="parquet").to_table(
             filter=ds.field("term").isin(missing),
-            columns=["seg_id", "term", "doc_ids", "tfs", "blocks"],
+            columns=["seg_id", "term", *columns],
         )
         fresh: dict[str, dict] = {t: {} for t in missing}
-        sizes: dict[str, int] = {t: 0 for t in missing}
-        for seg_id, term, doc_ids, tfs, blk in zip(
-            table.column("seg_id").to_pylist(),
-            table.column("term").to_pylist(),
-            table.column("doc_ids").to_pylist(),
-            table.column("tfs").to_pylist(),
-            table.column("blocks").to_pylist(),
+        sizes = dict.fromkeys(missing, 0)
+        for seg_id, term, *vals in zip(
+            *(c.to_pylist() for c in table.columns)
         ):
+            entry, nb = decode(*vals)
+            fresh[term][int(seg_id)] = entry
+            sizes[term] += nb
+        for t in missing:
+            cache.put((kind, t), fresh[t], sizes[t])
+            out[t] = fresh[t]
+        return out
+
+    def _load_postings(self, terms: list[str]) -> dict[str, dict]:
+        """{term: {seg_id: (docs, tfs, blocks|None)}} via
+        :meth:`_cached_terms`."""
+
+        def decode(doc_ids, tfs, blk):
             blocks = None
             if blk:
                 tri = codec.decode_varints(blk).astype(np.int64)
                 blocks = (tri[0::3], tri[1::3], tri[2::3])
-            entry = (
-                codec.decode_postings(doc_ids).astype(np.int64),
-                codec.decode_varints(tfs).astype(np.int64),
-                blocks,
-            )
-            fresh[term][int(seg_id)] = entry
-            sizes[term] += entry[0].nbytes + entry[1].nbytes + (
+            docs = codec.decode_postings(doc_ids).astype(np.int64)
+            tfs = codec.decode_varints(tfs).astype(np.int64)
+            nb = docs.nbytes + tfs.nbytes + (
                 sum(b.nbytes for b in blocks) if blocks else 0
             )
-        for t in missing:
-            self._local_cache.put(("p", t), fresh[t], sizes[t])
-            out[t] = fresh[t]
-        return out
+            return (docs, tfs, blocks), nb
+
+        return self._cached_terms(
+            "p", terms, ["doc_ids", "tfs", "blocks"], decode
+        )
 
     def _load_occurrences(
         self, terms: set[str]
     ) -> dict[str, dict[int, np.ndarray]]:
         """{term: {seg_id: occurrence keys}} for driver-path Phrase /
-        Near evaluation — decoded lazily per term from one pruned
-        parquet read of the positions columns and held in the same
-        byte-bounded LRU as postings (key ``("o", term)``; a later
-        eviction never invalidates the returned snapshot)."""
-        out: dict[str, dict] = {}
-        missing = []
-        for t in set(terms):
-            hit = self._local_cache.get(("o", t))
-            if hit is not None:
-                out[t] = hit
-            else:
-                missing.append(t)
-        if not missing:
-            return out
-        import pyarrow.dataset as ds
+        Near evaluation, via :meth:`_cached_terms` over the positions
+        columns."""
 
-        table = ds.dataset(self.seg_dir, format="parquet").to_table(
-            filter=ds.field("term").isin(missing),
-            columns=["seg_id", "term", "doc_ids", "pos_counts", "positions"],
-        )
-        fresh: dict[str, dict] = {t: {} for t in missing}
-        sizes: dict[str, int] = {t: 0 for t in missing}
-        for seg_id, term, doc_ids, pc, pos in zip(
-            table.column("seg_id").to_pylist(),
-            table.column("term").to_pylist(),
-            table.column("doc_ids").to_pylist(),
-            table.column("pos_counts").to_pylist(),
-            table.column("positions").to_pylist(),
-        ):
+        def decode(doc_ids, pc, pos):
             keys = _decode_occurrence_keys(
                 codec.decode_postings(doc_ids).astype(np.int64),
                 codec.decode_varints(pc).astype(np.int64),
                 codec.decode_varints(pos).astype(np.int64),
             )
-            fresh[term][int(seg_id)] = keys
-            sizes[term] += keys.nbytes
-        for t in missing:
-            self._local_cache.put(("o", t), fresh[t], sizes[t])
-            out[t] = fresh[t]
-        return out
+            return keys, keys.nbytes
+
+        return self._cached_terms(
+            "o", terms, ["doc_ids", "pos_counts", "positions"], decode
+        )
 
     def local_search(
         self, query: Node | str, k: int = spec.DEFAULT_K
@@ -3709,40 +3680,25 @@ class Index:
         self, query: Node | str
     ) -> list[tuple[str, int, int]]:
         """parity_search without a Spark job: pruned pyarrow read of the
-        query terms' occurrence rows, cached per term — the serving
-        layer's request path (a warm request is pure python/numpy)."""
-        import pyarrow.dataset as ds
-
+        query terms' occurrence rows, cached per term in the layout's
+        byte-bounded LRU — the serving layer's request path (a warm
+        request is pure python/numpy)."""
         node = self._prep(query)
-        terms = node.terms()
-        if not hasattr(self, "_parity_cache"):
-            self._parity_cache: dict[str, pd.DataFrame] = {}
-        missing = [
-            t
-            for t in set(terms) | {META_TERM}
-            if t not in self._parity_cache
-        ]
-        if missing:
-            fetched = (
-                ds.dataset(self.seg_dir, format="parquet")
-                .to_table(
-                    filter=ds.field("term").isin(missing),
-                    columns=[
-                        "seg_id", "term", "doc_ids", "tfs", "pos_counts",
-                        "positions",
-                    ],
-                )
-                .to_pandas()
-            )
-            for t in missing:
-                self._parity_cache[t] = fetched[fetched["term"] == t]
-        frame = pd.concat(
-            [self._parity_cache[t] for t in set(terms) | {META_TERM}],
-            ignore_index=True,
+        cols = ["doc_ids", "pos_counts", "positions"]
+        raw = self._cached_terms(
+            "r", set(node.terms()) | {META_TERM}, cols,
+            lambda *v: (v, sum(len(x) for x in v if x)),
         )
-        dead = self._replaced_seg_ids()
-        if dead:
-            frame = frame[~frame["seg_id"].isin(list(dead))]
+        dead = self._layout.replaced
+        frame = pd.DataFrame(
+            [
+                (sid, t, *vals)
+                for t, by_seg in raw.items()
+                for sid, vals in by_seg.items()
+                if sid not in dead
+            ],
+            columns=["seg_id", "term", *cols],
+        )
         return self._parity_from_frame(frame, node)
 
     def _parity_from_frame(
@@ -3839,10 +3795,17 @@ def _parity_segment_rows(
 
 def _decode_segment(pdf: pd.DataFrame):
     """Split a per-segment frame into postings {term: (docs, tfs, blocks)}
-    + meta arrays (ext doc ids by doc_index, doc lengths)."""
+    + meta arrays (ext doc ids by doc_index, doc lengths).  Every
+    caller scans through :meth:`Index._segment_scan`, which always
+    selects the META row, so a group without one is a partial segment
+    (a file split across scan partitions) or a corrupt file: raise
+    rather than silently score it as empty."""
     meta = pdf[pdf["term"] == META_TERM]
     if len(meta) == 0:
-        return {}, np.empty(0, np.int64), np.empty(0, np.int64), {}
+        raise ValueError(
+            f"segment {pdf['seg_id'].iloc[0]}: posting rows without the "
+            "META row (a partial or corrupt segment) — refusing to score it"
+        )
     meta_ids = codec.decode_postings(meta["doc_ids"].iloc[0]).astype(np.int64)
     has_tfs = "tfs" in pdf.columns
     doc_lens = (
@@ -4059,11 +4022,13 @@ def _flat_term_scores(terms, cand, postings, idfs, denom_norm):
     """Sum of per-term BM25 contributions over the candidate doc_index
     array (the pinned flat scoring semantics, spec §F4): a term absent
     from a doc contributes exactly 0.0.  ``denom_norm`` is the
-    length-normalized BM25 denominator, precomputed per candidate."""
+    length-normalized BM25 denominator, precomputed per candidate.  A
+    list that tombstones emptied contributes nothing, like a missing
+    one."""
     scores = np.zeros(len(cand), dtype=np.float64)
     for term in terms:
         p = postings.get(term)
-        if p is None or term not in idfs:
+        if p is None or len(p[0]) == 0 or term not in idfs:
             continue
         docs, tfs = p
         ix = np.searchsorted(docs, cand)

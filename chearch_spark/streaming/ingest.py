@@ -430,8 +430,8 @@ def finalize_index(spark, out_dir: str, incremental: bool = True) -> dict:
         seg = seg.filter(~F.col("seg_id").isin([int(s) for s in dead]))
     # the live seg-id set from the DIRECTORY listing (minus dead) —
     # exactly the files the dictionary scan below reads, so dictionary
-    # coverage/fp stay consistent with dictionary CONTENT even for a
-    # pathological segment file with no META row
+    # coverage/fp stay consistent with dictionary CONTENT; the META-row
+    # count is checked against it once the jobs finish
     live_ids = sorted(
         int(s) for s in _seg_files(seg_dir) if s not in dead
     )
@@ -484,6 +484,15 @@ def finalize_index(spark, out_dir: str, incremental: bool = True) -> dict:
         meta = f_stats.result()
         has_pos = f_pos.result()
         f_dict.result()
+    if int(meta.n_segments) != len(live_ids):
+        # stats count META rows, coverage and fingerprints count files:
+        # a segment file without its META row (or with two) would make
+        # them disagree silently
+        raise ValueError(
+            f"finalize_index: {int(meta.n_segments)} META rows but "
+            f"{len(live_ids)} live segment files in {seg_dir} — a segment "
+            "file is missing its META row; run scripts/verify_index.py"
+        )
     n_docs = int(meta.n_docs or 0)
     total_tokens = int(meta.n_tokens or 0)
     # Global content fingerprint: content_fp is an order-independent

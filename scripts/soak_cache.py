@@ -97,14 +97,14 @@ def main() -> None:
     for i in range(N_QUERIES):
         t = q_terms[i % DISTINCT_QUERY_TERMS]
         ix.local_search(Term(t), k=10)
-        assert ix._local_cache.total <= BUDGET, (
-            i, ix._local_cache.total
+        assert ix._layout.local_cache.total <= BUDGET, (
+            i, ix._layout.local_cache.total
         )
         if i % 2000 == 1999:
             samples.append(
                 (i + 1, round(rss_mb(), 1),
-                 round(ix._local_cache.total / 1e6, 2),
-                 len(ix._local_cache))
+                 round(ix._layout.local_cache.total / 1e6, 2),
+                 len(ix._layout.local_cache))
             )
     wall = time.time() - t0
     rss1 = rss_mb()

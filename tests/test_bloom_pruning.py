@@ -62,16 +62,16 @@ def test_pruned_results_identical(pruned_index):
     ):
         got = [(r.doc_id, round(r.score, 9)) for r in ix.search(q, k=10).collect()]
         # disable BOTH pruning sources (directory + blooms) and compare
-        saved_blooms, saved_cov = ix._blooms, ix._dict_coverage
-        ix._blooms = {}
-        ix._dict_coverage = None
+        saved_blooms, saved_cov = ix._layout.blooms, ix._layout.dict_coverage
+        ix._layout.blooms = {}
+        ix._layout.dict_coverage = None
         try:
             want = [
                 (r.doc_id, round(r.score, 9))
                 for r in ix.search(q, k=10).collect()
             ]
         finally:
-            ix._blooms, ix._dict_coverage = saved_blooms, saved_cov
+            ix._layout.blooms, ix._layout.dict_coverage = saved_blooms, saved_cov
         assert got == want, q
         local = [(d, round(s, 9)) for d, s in ix.local_search(q, k=10)]
         assert local == want, q
@@ -158,7 +158,7 @@ def test_distributed_probe_matches_driver_probe(spark, pruned_index, monkeypatch
     # the BLOOM path (not the exact directory) is what's exercised.
     monkeypatch.setattr(bloom_mod, "DISTRIBUTED_PROBE_THRESHOLD", 0)
     ix2 = Index(spark, ix.path)
-    ix2._dict_coverage = None
+    ix2._layout.dict_coverage = None
     assert ix2.candidate_segments(
         Term("uniq0042")
     ) == bloom_mod.candidate_segments(blooms, ["uniq0042"], False)
@@ -169,7 +169,7 @@ def test_distributed_probe_matches_driver_probe(spark, pruned_index, monkeypatch
         r.doc_id for r in ix.match_docs(Term("common") & Term("uniq0042")).collect()
     )
     assert got == want
-    assert ix2._blooms is None  # filters never loaded driver-side
+    assert ix2._layout.blooms is None  # filters never loaded driver-side
 
 
 def test_directory_pruning_is_exact(spark, pruned_index):
@@ -256,8 +256,8 @@ def test_segment_without_bloom_entry_is_always_scanned(
     assert 3 in blooms
     del blooms[3]
     ix2 = Index(spark, ix.path)
-    ix2._blooms = blooms
-    ix2._dict_coverage = None
+    ix2._layout.blooms = blooms
+    ix2._layout.dict_coverage = None
     for q in (Term("uniq0042"), Term("zz_nope_zz") & Term("common")):
         cand = ix2.candidate_segments(q)
         assert cand is not None and 3 in cand, q
@@ -427,7 +427,7 @@ def test_candidate_segments_100k_distributed_probe(
     """The 100k-SEGMENT regime (the scale the 10k test approximates):
     past DISTRIBUTED_PROBE_THRESHOLD the bloom probe for uncovered
     segments runs as a SPARK JOB — the filter bytes never load into
-    the driver (``ix._blooms`` stays None) — while the exact
+    the driver (``ix._layout.blooms`` stays None) — while the exact
     term->segments directory keeps covered-term probes pure in-memory
     set algebra under the warm-latency bound.  Stub files: only
     metadata (listing, dictionary, blooms, manifests) is read."""
@@ -518,9 +518,9 @@ def test_candidate_segments_100k_distributed_probe(
     # distributed threshold: only those segments' bloom rows were read
     # into the cached partial probe — the full 102k-filter map never
     # touches the driver and no Spark job ran
-    assert ix._blooms is None and ix._bloom_probe is None
-    assert ix._partial_probe is not None
-    assert len(ix._partial_probe[1].seg_set) == n_stream
+    assert ix._layout.blooms is None and ix._layout.bloom_probe is None
+    assert ix._layout.partial_probe is not None
+    assert len(ix._layout.partial_probe[1].seg_set) == n_stream
 
     # warm probes (directory set algebra + cached partial probe) stay
     # under the serving-latency bound — Spark-free even with
@@ -535,13 +535,13 @@ def test_candidate_segments_100k_distributed_probe(
     # ~102k segments -> the bloom probe MUST run as a Spark job and
     # the filter bytes must still never load driver-side
     ix2 = Index(spark, out)
-    ix2._dict_coverage = None  # as if dict_coverage.json were absent
+    ix2._layout.dict_coverage = None  # as if dict_coverage.json were absent
     cand2 = ix2.candidate_segments(Term("rare"))
     # blooms cover only the stream segments; everything un-bloomed
     # (all batch segments) must be scanned — advisory coverage
     assert set(cand2) == set(batch_ids) | fp_rare
-    assert ix2._blooms is None and ix2._bloom_probe is None
-    assert ix2._partial_probe is None
+    assert ix2._layout.blooms is None and ix2._layout.bloom_probe is None
+    assert ix2._layout.partial_probe is None
     # a DRIVER-LOCAL caller over the same ~102k scope must neither
     # load the filter map nor launch a job: pruning degrades to
     # scan-everything (advisory), driver memory stays bounded
@@ -549,7 +549,7 @@ def test_candidate_segments_100k_distributed_probe(
     # None = scan everything (no dead segments to exclude here) — the
     # API's no-pruning value; the point is no load and no job happened
     assert cand3 is None
-    assert ix2._blooms is None and ix2._bloom_probe is None
+    assert ix2._layout.blooms is None and ix2._layout.bloom_probe is None
 
 
 def test_bloom_publish_is_distributed(pruned_index):

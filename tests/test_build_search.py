@@ -101,11 +101,11 @@ def test_per_segment_dispatch_paths_identical(index):
         }
 
     fast = snap()
-    index._segs_unsplit = False  # force the groupBy fallback
+    index._layout.segs_unsplit = False  # force the groupBy fallback
     try:
         slow = snap()
     finally:
-        index._segs_unsplit = None  # re-derive for other tests
+        del index._layout.segs_unsplit  # re-derive for other tests
     assert fast == slow
 
 
@@ -1210,7 +1210,7 @@ def test_dictionary_file_level_pruning(spark, tmp_path_factory):
     ix = Index(spark, out)
 
     assert os.path.exists(os.path.join(out, "dict_bounds.json"))
-    bounds = ix._load_dict_bounds()
+    bounds = ix._layout.dict_bounds
     n_files = len(bounds)
     assert n_files >= 4  # S//8 range files
     # disjoint, ordered ranges covering the vocab
@@ -1478,9 +1478,9 @@ def test_local_cache_byte_budget_holds_under_rotation(spark, tmp_path_factory):
         for j in range(0, 50, 3):
             got = ix.local_search(Term(f"w{j}"), k=10)
             assert got == want[f"w{j}"], (sweep, j)
-            assert ix._local_cache.total <= ix.local_cache_bytes
+            assert ix._layout.local_cache.total <= ix.local_cache_bytes
     # eviction actually happened (the workload exceeds the budget)
-    assert len(ix._local_cache) < 17 + 4  # < all terms + all metas
+    assert len(ix._layout.local_cache) < 17 + 4  # < all terms + all metas
 
 
 def test_local_search_loads_only_candidate_meta(spark, tmp_path_factory):
@@ -1498,7 +1498,7 @@ def test_local_search_loads_only_candidate_meta(spark, tmp_path_factory):
     # only that segment's meta is cached
     hits = ix.local_search(Term("only_007"), k=5)
     assert len(hits) == 1
-    metas = [k for k in ix._local_cache._d if k[0] == "m"]
+    metas = [k for k in ix._layout.local_cache._d if k[0] == "m"]
     assert len(metas) == 1
 
 
@@ -2080,3 +2080,73 @@ def test_search_sorted_semantics(spark, index, corpus_pdf):
         ).head(10).itertuples()
     ]
     assert got_asc == want_asc
+
+
+def test_refresh_rederives_split_guard(spark, corpus_pdf, tmp_path_factory):
+    """refresh() re-derives the shuffle-free dispatch guard: once the
+    split cap is under the segment file sizes (as after a compaction
+    grows a segment past it), a refreshed Index must leave the
+    partition-local path and answer exactly like a freshly opened
+    one."""
+    out = str(tmp_path_factory.mktemp("split_ix"))
+    build_index(spark, spark.createDataFrame(corpus_pdf), out, num_segments=4)
+    ix = Index(spark, out)
+    q = QUERIES["q_nested1"]
+    before = _collect(ix.search(q, k=10))
+    assert ix._segments_unsplittable() is True
+    smallest = min(
+        e.stat().st_size
+        for e in os.scandir(ix.seg_dir)
+        if e.name.startswith("segment-")
+    )
+    keys = (
+        "spark.sql.files.openCostInBytes",
+        "spark.sql.files.maxPartitionBytes",
+    )
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, str(smallest // 2))
+        ix.refresh()
+        assert ix._segments_unsplittable() is False
+        got = _collect(ix.search(q, k=10))
+        assert got == _collect(Index(spark, out).search(q, k=10))
+        assert got == before
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_decode_segment_without_meta_raises():
+    """A segment group without its META row is partial or corrupt:
+    the kernel refuses it and names the segment."""
+    from chearch_spark.search import _decode_segment
+
+    pdf = pd.DataFrame(
+        {
+            "seg_id": [7],
+            "term": ["merge"],
+            "doc_ids": [b"\x00"],
+            "tfs": [b"\x01"],
+        }
+    )
+    with pytest.raises(ValueError, match="segment 7"):
+        _decode_segment(pdf)
+
+
+def test_snapshot_keeps_source_dir_mode(index, tmp_path):
+    """A snapshot is published with the source index directory's
+    permissions, not the 0700 of its temporary stage."""
+    import stat
+
+    mode = stat.S_IMODE(os.stat(index.path).st_mode)
+    os.chmod(index.path, 0o755)
+    try:
+        dest = tmp_path / "snap"
+        index.snapshot(str(dest))
+        assert stat.S_IMODE(os.stat(dest).st_mode) == 0o755
+    finally:
+        os.chmod(index.path, mode)

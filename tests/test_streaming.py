@@ -122,6 +122,33 @@ def test_finalize_fingerprint_legacy_fallback_is_distributed(spark, dirs):
     assert got == want
 
 
+def test_full_finalize_rejects_segment_without_meta(spark, dirs):
+    """Full finalize counts segments twice: META rows for the stats,
+    the file listing for coverage and fingerprints.  A segment file
+    that lost its META row makes them disagree, and finalize must
+    fail instead of publishing stats that undercount it."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from chearch_spark.build import META_TERM
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
+        "doc_id", "text"
+    ).limit(100)
+    out = dirs["stream_ix"]
+    ingest_batch(docs, out, batch_id=0, num_segments=2)
+    finalize_index(spark, out, incremental=False)  # consistent: passes
+    seg_dir = os.path.join(out, "segments")
+    victim = os.path.join(
+        seg_dir,
+        sorted(f for f in os.listdir(seg_dir) if f.startswith("segment-"))[0],
+    )
+    t = pq.read_table(victim)
+    pq.write_table(t.filter(pc.not_equal(t["term"], META_TERM)), victim)
+    with pytest.raises(ValueError, match="META"):
+        finalize_index(spark, out, incremental=False)
+
+
 def test_watermarked_window_stream_matches_batch(spark, dirs):
     """Watermarked tumbling-window streaming agg: every window the
     stream finalizes (append mode) must equal the batch computation;

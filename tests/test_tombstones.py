@@ -420,3 +420,76 @@ def test_gc_large_set_stays_off_the_driver(spark, tmp_index_dir):
     ix = Index(spark, out)
     live = {int(r.doc_id) for r in ix.match_docs(Term("alpha")).collect()}
     assert not set(range(10)) & live
+
+
+# nested AND/OR shapes that score through _flat_term_scores (neither a
+# pure disjunction nor a pure conjunction)
+EMPTIED_SHAPES = {
+    "(a b) OR c": lambda a, b, c: (a & b) | c,
+    "a OR (b c)": lambda a, b, c: a | (b & c),
+    "a (b OR c)": lambda a, b, c: a & (b | c),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(EMPTIED_SHAPES))
+def test_score_decoded_skips_emptied_posting_list(shape):
+    """A posting list that tombstones emptied scores like a missing
+    one, instead of indexing docs[-1] of an empty array."""
+    from chearch_spark.search import _drop_tombstoned, _score_decoded
+
+    node = EMPTIED_SHAPES[shape](Term("a"), Term("b"), Term("c"))
+    meta_ids = np.array([10, 11, 12, 13], dtype=np.int64)
+    doc_lens = np.array([3, 4, 2, 3], dtype=np.int64)
+    idfs = {"a": 0.4, "b": 0.9, "c": 1.7}
+
+    def post(*docs):
+        d = np.array(docs, dtype=np.int64)
+        return d, np.ones(len(d), dtype=np.int64)
+
+    postings = {"a": post(0, 1, 2), "b": post(1, 2), "c": post(3)}
+    kept, blocks = _drop_tombstoned(
+        postings, {}, meta_ids, np.array([13], dtype=np.int64)
+    )
+    assert len(kept["c"][0]) == 0  # every doc holding c is deleted
+    got = _score_decoded(node, kept, meta_ids, doc_lens, blocks, idfs, 3.0, 10)
+    missing = {t: p for t, p in kept.items() if t != "c"}
+    want = _score_decoded(node, missing, meta_ids, doc_lens, {}, idfs, 3.0, 10)
+    for g, w in zip(got, want):
+        np.testing.assert_array_equal(g, w)
+    assert len(got[0]) > 0
+
+
+def test_emptied_posting_list_all_paths_agree(spark, tmp_index_dir):
+    """Delete every doc holding `c` in one segment (not yet compacted):
+    local_search, search and search_many must not raise, must agree
+    and must exclude the deleted docs."""
+    rows = [
+        (i, "a" + (" b" if i % 2 else "") + (" c" if i % 5 == 0 else ""))
+        for i in range(80)
+    ]
+    df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
+    build_index(spark, df, tmp_index_dir, num_segments=2, resume=False)
+    ix = Index(spark, tmp_index_dir)
+    seg_of = {int(r.doc_id): int(r.seg_id) for r in ix.docmap().collect()}
+    c_docs = [i for i, _ in rows if i % 5 == 0]
+    seg0 = seg_of[c_docs[0]]
+    victims = [d for d in c_docs if seg_of[d] == seg0]
+    assert len(victims) < len(c_docs)  # c survives in the other segment
+    assert ix.delete(victims) == len(victims)
+
+    queries = {
+        s: f(Term("a"), Term("b"), Term("c"))
+        for s, f in EMPTIED_SHAPES.items()
+    }
+    many = {}
+    for r in ix.search_many(queries, k=100).collect():
+        many.setdefault(r.query, []).append((int(r.doc_id), r.score))
+    for name, q in queries.items():
+        local = ix.local_search(q, k=100)
+        dist = [(int(r.doc_id), r.score) for r in ix.search(q, k=100).collect()]
+        assert local and not {d for d, _ in local} & set(victims), name
+        for other in (dist, many[name]):
+            assert [d for d, _ in other] == [d for d, _ in local], name
+            assert [s for _, s in other] == pytest.approx(
+                [s for _, s in local], rel=1e-12
+            ), name
